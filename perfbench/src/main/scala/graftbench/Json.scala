@@ -1,0 +1,32 @@
+package graftbench
+
+/** Just enough JSON writing for the harness's result file. */
+object Json {
+  def apply(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => apply(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => apply(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] => m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case c: Leaks.Count =>
+      apply(Map("after" -> c.after, "persisted" -> c.persisted, "listeners" -> c.listeners,
+        "streams" -> c.streams))
+    case t: Product if t.getClass.getName.startsWith("scala.Tuple") => apply(t.productIterator.toSeq)
+    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
